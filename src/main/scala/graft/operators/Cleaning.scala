@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,9 +17,11 @@ import graft.schema.Occurrence
   * plan produces `clean` and `rejected` DataFrames with the invariant
   * `clean.count + rejected.count == input.count`.
   *
-  * Scale: both outputs share the scan; no driver-side state, no
-  * collect. Rejection tagging is a codegen'd projection, so a 100 TB
-  * input pays one pass.
+  * Scale: one tagged projection parses the date, coerces the
+  * coordinates and sets `_failure_reason` (null = clean) per row;
+  * `clean` and `rejected` are two filters of it, so each output is one
+  * scan of the input. No driver-side state, no collect. The two outputs
+  * are still two actions, so writing both reads the input twice.
   */
 object Cleaning {
 
@@ -25,6 +29,9 @@ object Cleaning {
   final case class CleanResult(clean: DataFrame, rejected: DataFrame)
 
   import Occurrence._
+
+  /** Metric that [[clean]]'s `rejectedMeter` reports: the rejected rows. */
+  val rejectedMetric = "n_rejected"
 
   /** Apply all cleaning steps (mirrors `clean_raw_dataframe`,
     * `cleaning.py:76-98`):
@@ -35,45 +42,63 @@ object Cleaning {
     *  5. coerce individualCount, default 1 (C5)
     *  6. derive temporal columns (C3)
     *  7. project to canonical columns present in the input (P1)
+    *
+    * Steps 1–4 are one tagged projection. `rejected` carries the
+    * input columns (eventDate rescued, coordinates coerced) plus the
+    * three sidecar tags. When `rejectedMeter` is given it counts the
+    * rejected rows as [[rejectedMetric]] on the `clean` side's scan, so
+    * the caller that writes `clean` learns the count without running
+    * `rejected`; `rejected`'s own plan carries no meter.
     */
-  def clean(raw: DataFrame): CleanResult = {
-    val hasEventDate = raw.columns.contains("eventDate")
-    val rescued =
-      if (hasEventDate)
-        raw.withColumn("eventDate", rescueEventDate(col("eventDate")))
-      else raw.withColumn("eventDate", lit(null).cast(StringType))
+  def clean(raw: DataFrame, rejectedMeter: Option[Observation] = None): CleanResult = {
+    val tagged = tag(raw)
+    val reason = col(failureReasonCol)
 
-    val parsed = rescued.withColumn("eventDateParsed", parseEventTs(col("eventDate")))
-    val dateOk = col("eventDateParsed").isNotNull
+    val rejected = tagged.filter(reason.isNotNull).select(
+      tagged.columns.filterNot(Set("eventDateParsed", failureReasonCol)).map(col) ++ Seq(
+        when(reason === reasonUnparseableDate, col("eventDate")).as(rawEventDateCol),
+        reason,
+        when(reason === reasonUnparseableDate,
+          lit("timestamp parse could not parse eventDate after rescue pass"))
+          .otherwise(lit("decimalLatitude or decimalLongitude is null / non-numeric"))
+          .as(failureDetailCol)): _*)
 
-    val rejectedDates = parsed.filter(!dateOk)
-      .drop("eventDateParsed")
-      .withColumn(rawEventDateCol, col("eventDate"))
-      .withColumn(failureReasonCol, lit(reasonUnparseableDate))
-      .withColumn(failureDetailCol,
-        lit("timestamp parse could not parse eventDate after rescue pass"))
-
-    val coerced = parsed.filter(dateOk)
-      .withColumn("decimalLatitude", tryToDouble(col("decimalLatitude")))
-      .withColumn("decimalLongitude", tryToDouble(col("decimalLongitude")))
-    val coordOk =
-      col("decimalLatitude").isNotNull && col("decimalLongitude").isNotNull
-
-    val rejectedCoords = coerced.filter(!coordOk)
-      .drop("eventDateParsed")
-      .withColumn(failureReasonCol, lit(reasonInvalidCoords))
-      .withColumn(failureDetailCol,
-        lit("decimalLatitude or decimalLongitude is null / non-numeric"))
-
-    val cleanDf = coerced.filter(coordOk)
+    val metered = rejectedMeter.fold(tagged)(
+      tagged.observe(_, count(reason).as(rejectedMetric)))
+    val cleanDf = metered.filter(reason.isNull)
+      .drop(failureReasonCol)
       .withColumn("individualCount",
         if (raw.columns.contains("individualCount")) coerceCount(col("individualCount"))
         else lit(1L))
       .transform(deriveTemporal)
       .transform(selectFinalColumns)
 
-    val rejected = rejectedDates.unionByName(rejectedCoords, allowMissingColumns = true)
     CleanResult(cleanDf, rejected)
+  }
+
+  /** Steps 1–4 as one projection over `raw`: eventDate rescued (added
+    * as null when absent), `eventDateParsed`, the coordinates coerced
+    * to double, then `_failure_reason` — [[reasonUnparseableDate]],
+    * else [[reasonInvalidCoords]], else null. The reason is a second
+    * projection over the first: each parsed column is referenced twice
+    * above it, so the optimizer does not inline (and re-evaluate) the
+    * parse. A filter on the reason that is pushed below both evaluates
+    * it once more; an `observe()` between them, as on `dayScan`'s
+    * warehouse write, stops that push.
+    */
+  private def tag(raw: DataFrame): DataFrame = {
+    val eventDate =
+      if (raw.columns.contains("eventDate")) rescueEventDate(col("eventDate"))
+      else lit(null).cast(StringType)
+    raw.withColumns(ListMap(
+      "eventDate" -> eventDate,
+      "eventDateParsed" -> parseEventTs(eventDate),
+      "decimalLatitude" -> tryToDouble(col("decimalLatitude")),
+      "decimalLongitude" -> tryToDouble(col("decimalLongitude"))))
+      .withColumn(failureReasonCol,
+        when(col("eventDateParsed").isNull, lit(reasonUnparseableDate))
+          .when(col("decimalLatitude").isNull || col("decimalLongitude").isNull,
+            lit(reasonInvalidCoords)))
   }
 
   /** C3: attach the temporal sub-columns from `eventDateParsed`

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.sql.{Date => SqlDate}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DateTimeFunctions
@@ -36,11 +36,12 @@ object MonarchPipeline {
   /** `transform_gbif_data` (`/root/reference/monarch_etl/transform.py:25-53`):
     * clean → enrich → attach time_only → enforce schema. One lazy plan.
     */
-  def transform(raw: DataFrame, geocoder: GeocodeProvider = NullGeocode): CleanResult = {
-    val CleanResult(clean, rejected) = Cleaning.clean(raw)
-    val enriched = geocoder.attach(clean)
-    val withTime = Enrichment.attachTimeOnly(enriched)
-    CleanResult(SchemaEnforce.enforceSchema(withTime), rejected)
+  def transform(raw: DataFrame, geocoder: GeocodeProvider = NullGeocode): CleanResult =
+    enrich(Cleaning.clean(raw), geocoder)
+
+  private def enrich(cleaned: CleanResult, geocoder: GeocodeProvider): CleanResult = {
+    val withTime = Enrichment.attachTimeOnly(geocoder.attach(cleaned.clean))
+    cleaned.copy(clean = SchemaEnforce.enforceSchema(withTime))
   }
 
   /** Per-run load summary (what the reference logs + registers). */
@@ -49,6 +50,13 @@ object MonarchPipeline {
 
   /** §3.1 lifecycle for one day of data: transform → write partitioned →
     * rejection CSV → inventory upsert. `raw` is the day's extract.
+    *
+    * Scans: the loaded and rejected counts are `observe()` metrics on
+    * the warehouse write, so no count job runs. `raw` is read once by
+    * that write and once more by the sidecar write when there are
+    * rejects — twice per day, once on a day without rejects. A day
+    * without rejects removes the sidecar a previous run left at
+    * `rejectionPath`, which always holds the latest run's rejects.
     */
   def dayScan(
       spark: SparkSession,
@@ -59,17 +67,21 @@ object MonarchPipeline {
       inventoryPath: String,
       geocoder: GeocodeProvider = NullGeocode): LoadSummary = {
 
-    val CleanResult(clean, rejected) = transform(raw, geocoder)
+    val rejectedObs = new Observation("dayScan_rejected")
+    val CleanResult(clean, rejected) =
+      enrich(Cleaning.clean(raw, Some(rejectedObs)), geocoder)
     // restrict to the requested day — the reference extracts day-scoped
     // pages from the API (etl.py:99-107); a file source may carry more
     val dayDate = SqlDate.valueOf(f"$year-$month%02d-$day%02d")
+    val loadedObs = new Observation("dayScan_loaded")
     val dayDf = clean.filter(col("date_only") === lit(dayDate))
-
-    val loaded = dayDf.count()
-    val nRejected = rejected.count()
+      .observe(loadedObs, count(lit(1)).as("n_loaded"))
 
     Writers.writePartitionedByDay(dayDf, warehousePath)
+    val loaded = loadedObs.get("n_loaded").asInstanceOf[Long]
+    val nRejected = rejectedObs.get(Cleaning.rejectedMetric).asInstanceOf[Long]
     if (nRejected > 0) Writers.writeRejections(rejected, rejectionPath)
+    else Writers.removeRejections(spark, rejectionPath)
 
     val tableName = tableNameForDayStr(year, month, day)
     Writers.upsertInventory(spark, inventoryPath, dayDate, tableName, loaded)

@@ -157,6 +157,15 @@ object Writers {
   def writeRejections(rejected: DataFrame, path: String): Unit =
     rejected.write.option("header", "true").mode(SaveMode.Overwrite).csv(path)
 
+  /** K3 for a run with no rejects: removes the sidecar an earlier run
+    * left at `path`, so the path keeps meaning "the latest run's
+    * rejects" without a scan to write an empty file.
+    */
+  def removeRejections(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
   /** Retention TTL for a hive-partitioned table: drop every
     * `partitionCol=<value>` leaf whose value sorts strictly below
     * `cutoff` — the data-retention counterpart of the per-day loaders
@@ -456,7 +465,8 @@ object Writers {
     * CONFLICT DO UPDATE). The inventory is a tiny catalog table (one row
     * per ingested day — O(10³) rows for decades), so a read-modify-write
     * through the driver is the right call even at 100 TB of fact data;
-    * the fact table never participates.
+    * the fact table never participates. Returns the catalog this call
+    * published, as a driver-local frame.
     */
   def upsertInventory(
       spark: SparkSession,
@@ -465,23 +475,6 @@ object Writers {
       tableName: String,
       recordCount: Long,
       processedAt: Timestamp = new Timestamp(System.currentTimeMillis())): DataFrame = {
-    val newRow = spark.createDataFrame(
-      java.util.List.of(Row(availableDate, tableName, recordCount, processedAt)),
-      Occurrence.inventorySchema)
-    val existing =
-      try spark.read.schema(Occurrence.inventorySchema).parquet(inventoryPath)
-        // drop any stale row for the same key (ON CONFLICT DO UPDATE)
-        .filter(col("available_date") =!= lit(availableDate))
-      catch { case _: org.apache.spark.sql.AnalysisException => // first write
-        spark.createDataFrame(
-          java.util.List.of[Row](), Occurrence.inventorySchema)
-      }
-    // catalog-sized: materialize on the driver before overwriting the
-    // path we just read (cannot overwrite a lazily-read source in place)
-    val merged = existing.unionByName(newRow).collect().toList
-    val out = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(merged).asJava,
-      Occurrence.inventorySchema)
     // Atomic-ish replace (the reference's ON CONFLICT upsert is atomic;
     // a direct overwrite of the live path is not — a crash mid-write
     // would lose the whole catalog). Write the new catalog to a temp
@@ -491,17 +484,18 @@ object Writers {
     //
     // Concurrency: ONE writer at a time, enforced by an atomic
     // create-if-absent lock file (two interleaved swaps could lose an
-    // upsert or strand a .bak). A crashed writer leaves the lock behind
-    // — remove `<inventoryPath>.lock` manually after verifying no
-    // writer is live (same operational contract as the reference's
-    // single cron-driven loader).
+    // upsert or strand a .bak). The catalog is read under the lock too:
+    // a read before it could miss a row another writer is publishing,
+    // and this publish would then drop that row. A crashed writer
+    // leaves the lock behind — remove `<inventoryPath>.lock` manually
+    // after verifying no writer is live (same operational contract as
+    // the reference's single cron-driven loader).
     //
     // Hadoop FileSystem.rename reports failure by RETURNING FALSE, not
     // throwing (and on a local FS a rename onto an existing directory
     // can nest the source inside it) — so every rename is checked and a
     // false is an error, and the .bak is deleted only after the
     // tmp→dst swap verifiably succeeded.
-    import org.apache.hadoop.fs.Path
     val dst = new Path(inventoryPath)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lock = new Path(inventoryPath + ".lock")
@@ -511,12 +505,27 @@ object Writers {
     var keepLock = false
     try {
       FaultInjection.point("upsertInventory:locked")
+      val hadPrior = fs.exists(dst)
+      // catalog-sized: materialize on the driver before overwriting the
+      // path we read (cannot overwrite a lazily-read source in place),
+      // dropping any stale row for the same key (ON CONFLICT DO UPDATE)
+      val kept =
+        if (!hadPrior) Seq.empty[Row]
+        else spark.read.schema(Occurrence.inventorySchema).parquet(inventoryPath)
+          .filter(col("available_date") =!= lit(availableDate))
+          .collect().toSeq
+      val out = spark.createDataFrame(
+        scala.jdk.CollectionConverters.SeqHasAsJava(
+          kept :+ Row(availableDate, tableName, recordCount, processedAt)).asJava,
+        Occurrence.inventorySchema)
       val (tmp, bak) = swapPaths(dst)
       out.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       publishByRename(fs, dst, tmp, bak, "upsertInventory",
-        hadPrior = fs.exists(dst), onUnrecovered = () => keepLock = true)
+        hadPrior = hadPrior, onUnrecovered = () => keepLock = true)
+      // not a read of the live path: after the lock is released that
+      // read could race the next writer's swap
+      out
     } finally if (!keepLock) fs.delete(lock, false)
-    spark.read.parquet(inventoryPath)
   }
 
   // ---------------------------------------------------------------

@@ -108,6 +108,41 @@ class CleaningSpec extends SparkSpec {
     assert(r.getAs[Long]("week_of_year") == 10L)
   }
 
+  test("rejected sidecar: exact schema and full row set") {
+    assert(result.rejected.schema.map(f => f.name -> f.dataType) == Seq(
+      "gbifID" -> LongType, "eventDate" -> StringType,
+      "decimalLatitude" -> DoubleType, "decimalLongitude" -> DoubleType,
+      "individualCount" -> StringType, "scientificName" -> StringType,
+      "countryCode" -> StringType, Occurrence.rawEventDateCol -> StringType,
+      Occurrence.failureReasonCol -> StringType,
+      Occurrence.failureDetailCol -> StringType))
+    val (d, dd) = (Occurrence.reasonUnparseableDate,
+      "timestamp parse could not parse eventDate after rescue pass")
+    val (c, cd) = (Occurrence.reasonInvalidCoords,
+      "decimalLatitude or decimalLongitude is null / non-numeric")
+    val sp = "Danaus plexippus"
+    // eventDate is the rescued value; `_raw_eventDate` is set on date
+    // rejects only; coordinates are the coerced doubles on both reasons
+    assert(rejectedRows.toSet == Set(
+      Row(6L, "June sometime", 47.61, -122.33, "1", sp, "US", "June sometime", d, dd),
+      Row(7L, null, 25.76, -80.19, "1", sp, "US", null, d, dd),
+      Row(8L, "", 39.74, -104.99, "1", sp, "US", "", d, dd),
+      Row(9L, "2024-03-05", null, -122.41, "1", sp, "US", null, c, cd),
+      Row(10L, "2024-03-06", 37.77, null, "1", sp, "US", null, c, cd)))
+  }
+
+  test("a date reject with a non-numeric coordinate is kept, coordinate null") {
+    val raw = spark.createDataFrame(java.util.List.of(
+      Row(1L, "June sometime", "north", " 47.610", "1", "Danaus plexippus", "US")),
+      RawFixture.schema)
+    val rows = Cleaning.clean(raw).rejected.collect()
+    assert(rows.length == 1)
+    assert(rows(0).getAs[String](Occurrence.failureReasonCol) ==
+      Occurrence.reasonUnparseableDate)
+    assert(rows(0).isNullAt(rows(0).fieldIndex("decimalLatitude")))
+    assert(rows(0).getAs[Double]("decimalLongitude") == 47.61)
+  }
+
   test("rejection report counts by reason") {
     val report = Cleaning.rejectionReport(result.rejected).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

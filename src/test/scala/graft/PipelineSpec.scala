@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.Row
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -100,6 +104,150 @@ class PipelineSpec extends SparkSpec {
     val inv = spark.read.parquet(s"$tmp/inventory")
     assert(inv.count() == 1) // upsert key available_date, no dup rows
     assert(inv.collect()(0).getAs[Long]("record_count") == 1L)
+  }
+
+  /** The fixture without its five rejects (ids 6–10). */
+  private def cleanOnlyFixture: DataFrame =
+    RawFixture.df(spark).filter(!col("gbifID").between(6L, 10L))
+
+  /** `df` written as JSON lines and read back as a file source, so its
+    * scans report input records the way a raw extract does.
+    */
+  private def asJsonExtract(df: DataFrame, name: String): DataFrame = {
+    val path = s"$tmp/extract-$name"
+    df.write.mode("overwrite").json(path)
+    spark.read.schema(RawFixture.schema).json(path)
+  }
+
+  /** Input records read by the Spark jobs `body` runs. Listener events
+    * arrive asynchronously but in order, so counting starts at a begin
+    * marker job and stops at an end marker job whose completion proves
+    * every task of `body` has been seen.
+    */
+  private def recordsReadDuring(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.scanMarker"
+    val records = new AtomicLong
+    val ended = new CountDownLatch(1)
+    @volatile var counting = false
+    @volatile var endJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case "begin" => counting = true
+          case "end" => counting = false; endJob = e.jobId
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (counting && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == endJob) ended.countDown()
+    }
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin")
+      body
+      marker("end")
+      assert(ended.await(60, TimeUnit.SECONDS), "end marker job never reported")
+      records.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("dayScan writes the rejection sidecar as CSV with a header and per-reason counts") {
+    val rej = s"$tmp/sidecar-rejects"
+    val s = MonarchPipeline.dayScan(spark, RawFixture.df(spark), 2024, 3, 8,
+      s"$tmp/sidecar-wh", rej, s"$tmp/sidecar-inv")
+    assert(s.rejected == 5)
+    val parts = new java.io.File(rej).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    assert(parts.nonEmpty, s"no CSV part file under $rej")
+    val header = Seq("gbifID", "eventDate", "decimalLatitude", "decimalLongitude",
+      "individualCount", "scientificName", "countryCode",
+      Occurrence.rawEventDateCol, Occurrence.failureReasonCol,
+      Occurrence.failureDetailCol).mkString(",")
+    parts.foreach { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try assert(src.getLines().next() == header, f.getName)
+      finally src.close()
+    }
+    val byReason = spark.read.option("header", "true").csv(rej)
+      .groupBy(col(Occurrence.failureReasonCol)).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byReason == Map(
+      Occurrence.reasonUnparseableDate -> 3L,
+      Occurrence.reasonInvalidCoords -> 2L))
+  }
+
+  test("dayScan reads its extract once per output it writes") {
+    val n = RawFixture.rows.size
+    val withRejects = asJsonExtract(RawFixture.df(spark), "all")
+    val read = recordsReadDuring {
+      val s = MonarchPipeline.dayScan(spark, withRejects, 2024, 3, 8,
+        s"$tmp/scan-wh", s"$tmp/scan-rejects", s"$tmp/scan-inv-1")
+      assert(s.loaded == 1 && s.rejected == 5)
+    }
+    // the warehouse write and the sidecar write
+    assert(read > 0 && read <= 2L * n, s"read $read records for a $n-record extract")
+
+    val clean = cleanOnlyFixture
+    val cleanRows = clean.count()
+    val noRejects = asJsonExtract(clean, "clean")
+    val readClean = recordsReadDuring {
+      val s = MonarchPipeline.dayScan(spark, noRejects, 2024, 3, 8,
+        s"$tmp/scan-wh", s"$tmp/scan-rejects", s"$tmp/scan-inv-2")
+      assert(s.loaded == 1 && s.rejected == 0)
+    }
+    // no rejects: the warehouse write is the only scan
+    assert(readClean == cleanRows,
+      s"read $readClean records for a $cleanRows-record extract with no rejects")
+  }
+
+  test("dayScan with no rejects removes the previous run's sidecar") {
+    val rej = s"$tmp/stale-rejects"
+    MonarchPipeline.dayScan(spark, RawFixture.df(spark), 2024, 3, 8,
+      s"$tmp/stale-wh", rej, s"$tmp/stale-inv")
+    assert(new java.io.File(rej).exists())
+    val s = MonarchPipeline.dayScan(spark, cleanOnlyFixture, 2024, 3, 8,
+      s"$tmp/stale-wh", rej, s"$tmp/stale-inv")
+    assert(s.loaded == 1 && s.rejected == 0)
+    assert(!new java.io.File(rej).exists(),
+      "a run with no rejects left the previous run's sidecar in place")
+  }
+
+  test("dayScan counts stay exact when the geocode join shuffles") {
+    // the rejected meter then sits in a shuffle map stage below the
+    // join and the loaded meter above it
+    val lookup = spark.createDataFrame(
+      java.util.List.of(Row(36.16, -86.78, "Davidson", "Nashville")),
+      StructType(Seq(
+        StructField("lat_cell", DoubleType), StructField("lon_cell", DoubleType),
+        StructField("county", StringType), StructField("cityOrTown", StringType))))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+      val s = MonarchPipeline.dayScan(spark, RawFixture.df(spark), 2024, 3, 8,
+        s"$tmp/geo-wh", s"$tmp/geo-rejects", s"$tmp/geo-inv",
+        new Enrichment.BroadcastGeocode(lookup))
+      assert(s.loaded == 1 && s.rejected == 5)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val row = spark.read.parquet(s"$tmp/geo-wh").collect().head
+    assert(row.getAs[String]("gbifID") == "12")
+    assert(row.getAs[String]("county") == "Davidson")
+  }
+
+  test("dayScan on an empty extract loads and rejects nothing") {
+    val empty = spark.createDataFrame(java.util.List.of[Row](), RawFixture.schema)
+    val s = MonarchPipeline.dayScan(spark, empty, 2024, 3, 8,
+      s"$tmp/empty-wh", s"$tmp/empty-rejects", s"$tmp/empty-inv")
+    assert(s.loaded == 0 && s.rejected == 0)
+    assert(spark.read.parquet(s"$tmp/empty-inv").collect()
+      .map(_.getAs[Long]("record_count")).toSeq == Seq(0L))
   }
 
   test("read path filters by year/month/day with partition pruning") {

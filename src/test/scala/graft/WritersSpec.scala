@@ -67,6 +67,41 @@ class WritersSpec extends SparkSpec {
     assert(!lock.exists(), "lock not released after upsert")
   }
 
+  test("inventory upsert: concurrent writers retrying on the lock lose no row") {
+    val path = freshPath()
+    val dates = (1 to 8).map(d => SqlDate.valueOf(f"2024-07-$d%02d"))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(dates.size)
+    try {
+      val done = dates.zipWithIndex.map { case (d, i) =>
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = {
+            start.await()
+            var attempts = 0
+            var landed = false
+            while (!landed) {
+              attempts += 1
+              try {
+                Writers.upsertInventory(spark, path, d, s"t$i", i.toLong, t0)
+                landed = true
+              } catch {
+                case e: IllegalStateException if e.getMessage.contains("single-writer") =>
+                  Thread.sleep(10)
+              }
+            }
+            attempts
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    val got = spark.read.parquet(path).collect().map(r =>
+      r.getAs[SqlDate]("available_date").toString -> r.getAs[Long]("record_count")).toMap
+    assert(got == dates.zipWithIndex.map { case (d, i) => d.toString -> i.toLong }.toMap)
+    assert(!new java.io.File(path + ".lock").exists(), "lock not released")
+  }
+
   test("partitioned merge: touched partitions upserted, untouched partition files not rewritten") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
